@@ -110,14 +110,17 @@ final case class CrawlConfig(
     /** compact the pending-frontier delta parts every K batches; between
       * compactions the per-batch state write is O(batch), not O(frontier). */
     compactEvery: Int = 4,
-    /** durable-commit granularity. false = full frontier/seen/crawl_log
-      * snapshot per batch (simple time travel; O(state) write per batch).
-      * true = the 10^10-frontier shape: each batch durably commits ONLY
-      * its delta parts (pending rows, done rows, dequeued-key and
-      * redirect tombstones, seen increment, log rows — O(batch) bytes),
-      * and the full tables are written only every `compactEvery` batches
-      * as a base snapshot; resume() reconstructs base + deltas with the
-      * same tombstone semantics the in-memory views use. */
+    /** durable-commit granularity. Every store-backed run takes one path:
+      * each non-empty batch that ends a base period writes the full
+      * frontier/seen/crawl_log tables as a base snapshot, and every other
+      * batch commits only its delta parts (pending rows, done rows,
+      * dequeued-key and redirect tombstones, seen increment, log rows —
+      * O(batch) bytes). false = a base period of 1: a full snapshot per
+      * non-empty batch (time travel to every batch; O(state) write per
+      * batch). true = the 10^10-frontier shape: the base period is
+      * `compactEvery`. resume() loads the latest base plus the deltas
+      * after it with the same tombstone semantics the in-memory views use;
+      * it refuses a store committed with the other setting. */
     durableDeltas: Boolean = false,
     /** the global contiguous crawl-sequence column is the crawl-order
       * parity artifact (range-partitioned sort + zipWithIndex). At
@@ -145,12 +148,12 @@ final case class CrawlResult(
   * extraction, two-tier dedup, delta re-enqueue, snapshot commit.
   *
   * State is kept as append-only delta parts (pending rows + dequeued-key
-  * tombstones + terminal rows + seen increments), each checkpointed once
-  * when produced, compacted every `compactEvery` batches — the per-batch
-  * write cost is proportional to the batch, not to the frontier
-  * (10^10-frontier design scale). Deterministic: batch time derives from
-  * the batch number, the dequeue is a total order, extracted links are
-  * sorted before enqueue.
+  * tombstones + terminal rows + seen increments, one [[DeltaTable]] each),
+  * compacted onto a base every `compactEvery` batches (every batch with a
+  * full-snapshot store) — the per-batch write cost is proportional to the
+  * batch, not to the frontier (10^10-frontier design scale).
+  * Deterministic: batch time derives from the batch number, the dequeue is
+  * a total order, extracted links are sorted before enqueue.
   */
 final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
     config: CrawlConfig, store: Option[SnapshotStore] = None) {
@@ -183,7 +186,6 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
     val internetL = internet
     val timeoutS = config.timeoutS
     val ua = config.userAgent
-    import spark.implicits._
     val obs = org.apache.spark.sql.Observation()
     val fetched = missingHosts.select("host").as[String]
       .repartition(parts, col("host"))
@@ -225,41 +227,46 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
 
   private def runInternal(seedsOpt: Option[Seq[String]]): CrawlResult = {
     // ---- delta state ---------------------------------------------------
-    // pending = union(pendingParts) minus dequeued (url_hash, ver) keys
-    // minus redirect-target urls; checkpointed parts only where a frame is
+    // pending = pending parts minus dequeued (url_hash, ver) keys minus
+    // redirect-target urls; checkpointed parts only where a frame is
     // reused across batches — per-batch transitions stay lazy and execute
     // inside the NEXT batch's dequeue job (one fewer action per batch)
-    val pendingParts = mutable.ArrayBuffer[DataFrame]()
-    val dequeuedKeyParts = mutable.ArrayBuffer[DataFrame]()
-    val redirectTombstoneParts = mutable.ArrayBuffer[DataFrame]()
-    val doneParts = mutable.ArrayBuffer[DataFrame]()
-    val seenParts = mutable.ArrayBuffer[DataFrame]()
-    val logParts = mutable.ArrayBuffer[DataFrame]()
-    val pageParts = mutable.ArrayBuffer[DataFrame]()
-    val imageParts = mutable.ArrayBuffer[DataFrame]()
-    val metricParts = mutable.ArrayBuffer[DataFrame]()
-
-    def unionAll(parts: Seq[DataFrame]): DataFrame =
-      if (parts.isEmpty) spark.emptyDataFrame
-      else parts.reduce(_ unionByName _)
+    val pending, done, dequeuedKeys, redirectTombstones, seen, log,
+      pages, images, metrics = new DeltaTable(spark)
+    // the durable tables with the store table each commits its deltas to
+    val durableTables = Seq(pending -> "frontier_pending_delta",
+      done -> "frontier_done_delta",
+      dequeuedKeys -> "frontier_dequeued_keys",
+      redirectTombstones -> "frontier_redirect_tombstones",
+      seen -> "seen_delta", log -> "crawl_log_delta")
 
     def pendingView: DataFrame = {
-      var base = unionAll(pendingParts.toSeq)
-      if (dequeuedKeyParts.nonEmpty)
-        base = base.join(unionAll(dequeuedKeyParts.toSeq),
-          Seq("url_hash", "ver"), "left_anti")
+      var base = pending.view
+      if (!dequeuedKeys.isEmpty)
+        base = base.join(dequeuedKeys.view, Seq("url_hash", "ver"),
+          "left_anti")
       // a URL whose content a redirect already delivered must never be
       // fetched again, even if it was enqueued before the redirect was
       // discovered (response.py:197-210)
-      if (redirectTombstoneParts.nonEmpty)
-        base = base.join(unionAll(redirectTombstoneParts.toSeq),
-          Seq("url_hash", "url"), "left_anti")
+      if (!redirectTombstones.isEmpty)
+        base = base.join(redirectTombstones.view, Seq("url_hash", "url"),
+          "left_anti")
       base
     }
-    def seenView: DataFrame = unionAll(seenParts.toSeq)
     def frontierView: DataFrame =
-      if (doneParts.isEmpty) pendingView
-      else unionAll(doneParts.toSeq).unionByName(pendingView)
+      if (done.isEmpty) pendingView else done.view.unionByName(pendingView)
+
+    /** The one compaction: every table restarts from a base (frontier,
+      * seen, crawl_log) that is already durable or materialized. */
+    def resetToBase(frontier: DataFrame, seenBase: DataFrame,
+        logBase: DataFrame): Unit = {
+      pending.reset(frontier.filter(col("state") === FrontierRow.StatePending))
+      done.reset(frontier.filter(col("state") =!= FrontierRow.StatePending))
+      dequeuedKeys.reset()
+      redirectTombstones.reset()
+      seen.reset(seenBase)
+      log.reset(logBase)
+    }
 
     def timed[T](name: String)(body: => T): T = {
       val t0 = System.nanoTime()
@@ -268,6 +275,12 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
         println(f"[crawl] $name: ${(System.nanoTime() - t0) / 1e9}%.2fs")
       out
     }
+
+    val fetchParts =
+      if (config.fetchPartitions > 0) config.fetchPartitions
+      else spark.sessionState.conf.numShufflePartitions
+    // the store layout, recorded in every commit's lineage
+    val mode = if (config.durableDeltas) "delta" else "full"
 
     // ---- seen-set Bloom accelerator ------------------------------------
     // Populated by a pass-through tap on url_hash inside the seen-delta
@@ -299,47 +312,33 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
 
     val startBatch = seedsOpt match {
       case Some(seeds) =>
+        // the seed wave is batch 0's delta, not yet durable
         val seeded = tapped(seedFrontier(seeds)).localCheckpoint(true)
-        pendingParts += seeded
-        seenParts += seeded.select("url", "url_hash")
+        pending += seeded
+        seen += seeded.select("url", "url_hash")
         noteInserted(seeds.size.toLong)
         0
       case None =>
-        // resume: rebuild the state views from the latest snapshot; the
-        // seen load doubles as the Bloom-repopulation pass (every
-        // url_hash flows through the accumulator tap in ONE checkpoint
-        // job — without it an empty filter would declare seen URLs
-        // "definitely new" and corrupt the dedup)
         val st = store.getOrElse(throw new IllegalStateException(
           "resume() requires a SnapshotStore"))
-        def loadSeen(frames: Seq[DataFrame]): Unit = {
-          val obs = org.apache.spark.sql.Observation()
-          val seenLoaded = tapped(frames.map(_.select("url", "url_hash"))
-            .reduce(_ unionByName _))
-            .observe(obs, count(lit(1)).as("n"))
-            .localCheckpoint(true)
-          seenParts += seenLoaded
-          noteInserted(obs.get("n").asInstanceOf[Long])
-        }
-        // both modes anchor on the batch-commit MARKER — the one tiny
-        // table written LAST in each batch's durable commit. A crash
-        // anywhere mid-commit leaves no marker for that batch, so resume
-        // anchors on the previous complete batch and deterministically
-        // replays the torn one (overwriting its partial snapshots);
-        // without this, a multi-table commit has no atomicity and a torn
-        // batch would resume into a state no uninterrupted run produces.
+        // resume anchors on the batch-commit MARKER — the one tiny table
+        // written LAST in each batch's durable commit. A crash anywhere
+        // mid-commit leaves no marker for that batch, so resume anchors on
+        // the previous complete batch and deterministically replays the
+        // torn one (overwriting its partial snapshots); without this, a
+        // multi-table commit has no atomicity and a torn batch would
+        // resume into a state no uninterrupted run produces.
         val marker = st.latestSnapshot("batch_commit").getOrElse(
           throw new IllegalStateException(
             "no committed batch marker to resume"))
-        // refuse a mode mismatch up front: a full-mode resume of a
-        // delta-mode store (or vice versa) would otherwise load a stale
-        // base and silently drop the deltas (r4 ADVICE #3 made loud)
+        // refuse a mode mismatch up front: the two settings write bases on
+        // different periods, so a store must resume with the setting that
+        // wrote it (r4 ADVICE #3 made loud)
         val markerMode = st.manifest("batch_commit", marker)
           .flatMap("\"mode\"\\s*:\\s*\"(\\w+)\"".r.findFirstMatchIn(_)
             .map(_.group(1)))
           .getOrElse("full")
-        val wantMode = if (config.durableDeltas) "delta" else "full"
-        if (markerMode != wantMode)
+        if (markerMode != mode)
           throw new IllegalStateException(
             s"store was committed in '$markerMode' mode but resume() is " +
               s"configured durableDeltas=${config.durableDeltas} — " +
@@ -358,87 +357,52 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
             throw new IllegalStateException(
               s"snapshot $table/$sn vanished between verify and read"))
         }
-        if (!config.durableDeltas) {
-          // empty batches commit ONLY their marker (no state changed),
-          // so the anchor tables live at the latest snapshot <= marker
-          def tableAt(table: String): Option[DataFrame] =
-            st.snapshots(table).filter(_ <= marker).lastOption
-              .map(readVerified(table, _))
-          val fr = tableAt("frontier").getOrElse(
-            throw new IllegalStateException(
-              s"no frontier snapshot at or before batch marker $marker"))
-          pendingParts += fr.filter(col("state") === FrontierRow.StatePending)
-          doneParts += fr.filter(col("state") =!= FrontierRow.StatePending)
-          loadSeen(Seq(tableAt("seen").getOrElse(
-            throw new IllegalStateException(
-              s"no seen snapshot at or before batch marker $marker"))))
-          tableAt("crawl_log").foreach(logParts += _)
-          marker.toInt + 1
-        } else {
-          // delta mode: latest full base at-or-before the marker (if any
-          // compaction ran) + every marker-covered delta snapshot after
-          // it, loaded into the SAME parts arrays the in-memory views
-          // are built from — tombstone semantics are therefore identical
-          // to an uninterrupted run
-          def committed(sn: Long) = sn <= marker
-          val baseSnap = st.snapshots("frontier").filter(committed).lastOption
-          def after(sn: Long) = baseSnap.forall(_ < sn) && committed(sn)
-          def loadDeltas(table: String,
-              into: mutable.ArrayBuffer[DataFrame]): Unit =
-            st.snapshots(table).filter(after)
-              .foreach(sn => into += readVerified(table, sn))
-          baseSnap.foreach { b =>
-            val fr = readVerified("frontier", b)
-            pendingParts += fr.filter(col("state") === FrontierRow.StatePending)
-            doneParts += fr.filter(col("state") =!= FrontierRow.StatePending)
-            if (st.snapshots("crawl_log").contains(b))
-              logParts += readVerified("crawl_log", b)
-          }
-          loadDeltas("frontier_pending_delta", pendingParts)
-          loadDeltas("frontier_done_delta", doneParts)
-          loadDeltas("frontier_dequeued_keys", dequeuedKeyParts)
-          loadDeltas("frontier_redirect_tombstones", redirectTombstoneParts)
-          loadDeltas("crawl_log_delta", logParts)
-          val seenFrames =
-            baseSnap.map(readVerified("seen", _)).toSeq ++
-              st.snapshots("seen_delta").filter(after)
-                .map(readVerified("seen_delta", _))
-          if (seenFrames.isEmpty)
-            throw new IllegalStateException(
-              "no committed delta snapshots to resume")
-          loadSeen(seenFrames)
-          (marker + 1).toInt
-        }
+        // the latest base at-or-before the marker plus every
+        // marker-covered delta snapshot after it, loaded into the SAME
+        // tables the in-memory views are built from — tombstone semantics
+        // are therefore identical to an uninterrupted run. Empty batches
+        // commit only their marker, and a full-snapshot store has no
+        // deltas after its base.
+        val base = st.snapshots("frontier").filter(_ <= marker).lastOption
+        base.foreach(b => resetToBase(readVerified("frontier", b),
+          readVerified("seen", b), readVerified("crawl_log", b)))
+        for ((t, table) <- durableTables;
+             sn <- st.snapshots(table) if sn <= marker && base.forall(_ < sn))
+          t += readVerified(table, sn)
+        if (seen.isEmpty)
+          throw new IllegalStateException(
+            s"no committed state at or before batch marker $marker")
+        // the seen load doubles as the Bloom-repopulation pass (every
+        // url_hash flows through the accumulator tap in ONE checkpoint
+        // job — without it an empty filter would declare seen URLs
+        // "definitely new" and corrupt the dedup)
+        val obs = org.apache.spark.sql.Observation()
+        seen.reset(tapped(seen.view.select("url", "url_hash"))
+          .observe(obs, count(lit(1)).as("n"))
+          .localCheckpoint(true))
+        noteInserted(obs.get("n").asInstanceOf[Long])
+        durableTables.foreach(_._1.markDurable())
+        (marker + 1).toInt
     }
 
     // ---- domain-rules cache (reference DomainCache LRU, fully distributed)
-    // robots_txt rows live distributed in checkpointed `rulesParts`, keyed
+    // robots_txt rows live distributed in checkpointed `rules` parts, keyed
     // by host with a fetched_batch recency column. The driver holds ONE
     // scalar — the current row count, maintained from per-checkpoint
     // observed metrics — never a host list (r3 VERDICT #3: the old
     // host→batch LinkedHashMap was the first thing a 10^10-frontier
     // deployment would have had to shard). Miss detection is a
     // distributed anti-join; eviction is a distributed recency top-k.
-    val rulesParts = mutable.ArrayBuffer[DataFrame]()
+    val rules = new DeltaTable(spark)
     var rulesCount = 0L
-    def rulesView: DataFrame = unionAll(rulesParts.toSeq)
 
     // per-batch driver counters for CrawlResult.counters — scalars the
     // loop already holds; never a distributed collection
     val counterRows = mutable.ArrayBuffer[(Int, String, Long)]()
 
-    // delta-durability bookkeeping: index of the first part in each array
-    // NOT yet durably committed (parts loaded by resume are durable)
-    var pendMark = pendingParts.length
-    var doneMark = doneParts.length
-    var dkMark = dequeuedKeyParts.length
-    var rtMark = redirectTombstoneParts.length
-    var seenMark = seenParts.length
-    var logMark = logParts.length
-    // in delta mode the seed wave is batch 0's delta, not pre-durable
-    if (config.durableDeltas && seedsOpt.nonEmpty) {
-      pendMark = 0; seenMark = 0
-    }
+    // a full-snapshot store writes a base after every non-empty batch
+    val basePeriod =
+      if (store.nonEmpty && !config.durableDeltas) 1 else config.compactEvery
 
     for (batch <- startBatch until startBatch + config.maxBatches) {
       val bt = batchTime(batch)
@@ -472,20 +436,17 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
         var sitemapUrls: Option[DataFrame] = None
         var newRulesOpt: Option[DataFrame] = None
         if (config.respectRobots || config.expandSitemaps) {
-          val parts =
-            if (config.fetchPartitions > 0) config.fetchPartitions
-            else spark.sessionState.conf.numShufflePartitions
           val batchHostsDf = dequeued.select("host").distinct()
           val missing =
-            if (rulesParts.isEmpty) batchHostsDf
-            else batchHostsDf.join(rulesView.select("host"),
+            if (rules.isEmpty) batchHostsDf
+            else batchHostsDf.join(rules.view.select("host"),
               Seq("host"), "left_anti")
           val (newRules, newCount) = timed(s"b$batch robots-fetch") {
-            fetchRobots(missing, batch, parts)
+            fetchRobots(missing, batch, fetchParts)
           }
           counterRows += ((batch, "robots_fetched", newCount))
           if (newCount > 0) {
-            rulesParts += newRules
+            rules += newRules
             rulesCount += newCount
             newRulesOpt = Some(newRules)
           }
@@ -506,13 +467,13 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
         // gated right now, and a null robots_txt can only mean the robots
         // fetch itself failed (⇒ allowed, like the reference).
         val gated =
-          if (config.respectRobots && rulesParts.nonEmpty) {
+          if (config.respectRobots && !rules.isEmpty) {
             val ua = config.userAgent
             val allowedUdf = udf { (txt: String, url: String) =>
               txt == null || txt.isEmpty || Robots.allows(txt, ua, url)
             }
             dequeued
-              .join(broadcast(rulesView
+              .join(broadcast(rules.view
                 .select("host", "robots_txt")), Seq("host"), "left")
               .withColumn("allowed", allowedUdf(col("robots_txt"), col("url")))
               .drop("robots_txt")
@@ -520,15 +481,12 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
         val toFetch = gated.filter(col("allowed"))
 
         // ---- host-partitioned, deterministically ordered fetch+parse ----
-        val parts =
-          if (config.fetchPartitions > 0) config.fetchPartitions
-          else spark.sessionState.conf.numShufflePartitions
         val internetL = internet
         val cfg = config
         val fetched: Dataset[FetchedPage] = timed(s"b$batch fetch+parse") {
           toFetch
             .select("url", "url_hash", "host", "host_hash_salted", "seq")
-            .repartition(parts, col("host_hash_salted"))
+            .repartition(fetchParts, col("host_hash_salted"))
             .sortWithinPartitions("host", "seq")
             .as[(String, Long, String, Long, Long)]
             .mapPartitions { it =>
@@ -537,20 +495,20 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
         }
 
         // per-batch outputs are lazy views over the checkpointed batch
-        logParts += fetched
+        log += fetched
           .select(lit(batch).as("batch"), col("seq"), col("url"),
             col("final_url"), col("status"), col("host"),
             col("crawl_time_ms"), col("content_type"))
-        pageParts += fetched
+        pages += fetched
           .drop("links", "feeds", "entry_links", "image_bytes")
           .withColumn("batch", lit(batch))
-        imageParts += fetched.filter(col("is_image"))
+        images += fetched.filter(col("is_image"))
           .select(col("url"), col("image_bytes").as("bytes"))
           .withColumn("image_id",
             regexp_extract(col("url"), "/img/(img\\d+)\\.", 1))
           .withColumn("batch", lit(batch))
         // metrics rollup (A4) + approximate distinct monitoring (A5)
-        metricParts += fetched.groupBy("host")
+        metrics += fetched.groupBy("host")
           .agg(count(lit(1)).as("fetches"),
             avg("crawl_time_ms").as("avg_crawl_time_ms"),
             sum(when(Statuses.invalidCol(col("status")), 1).otherwise(0))
@@ -571,12 +529,12 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
         }
         val admitted = Frontier.admit(allRaw, lit(batch + 1), lit(bt),
           config.saltBuckets).persist()
-        val seen = seenView
+        val seenNow = seen.view
         val fresh0 =
           if (bloomEnabled)
-            SeenSet.filterNewWithPartitionedBloom(admitted, seen,
+            SeenSet.filterNewWithPartitionedBloom(admitted, seenNow,
               bloomAcc.value)
-          else SeenSet.filterNewExact(admitted, seen)
+          else SeenSet.filterNewExact(admitted, seenNow)
 
         // redirect targets enter the seen set under their canonical form —
         // the reference processed the final URL's response, so the engine
@@ -592,7 +550,7 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
           .dropDuplicates("url")
           .withColumn("url_hash", xxhash64(col("url")))
         val redirCredit = redirectTargets
-          .join(seen.select("url_hash", "url"), Seq("url_hash", "url"),
+          .join(seenNow.select("url_hash", "url"), Seq("url_hash", "url"),
             "left_anti")
           .withColumn("src", lit("redir"))
         val freshRows = fresh0
@@ -613,10 +571,10 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
         noteInserted(deltaN)
         counterRows += ((batch, "bloom_inserted_total", bloomInserted))
         val fresh = delta.filter(col("src") === "link").drop("src")
-        seenParts += delta.select("url", "url_hash")
+        seen += delta.select("url", "url_hash")
         // pre-existing pending rows for redirect targets are tombstoned —
         // the redirect visit already delivered their content
-        redirectTombstoneParts += redirectTargets.select("url_hash", "url")
+        redirectTombstones += redirectTargets.select("url_hash", "url")
 
         // ---- state transition: only this batch's dequeued rows. Lazy on
         //      purpose — it reads only checkpointed inputs and executes
@@ -649,13 +607,13 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
           .drop("fetch_status", "allowed", "seq")
         // tombstone the dequeued versions; re-enqueue retries under a new
         // version so they survive the tombstone anti-join
-        dequeuedKeyParts += transitioned
+        dequeuedKeys += transitioned
           .select(col("url_hash"), col("old_ver").as("ver"))
-        pendingParts += transitioned
+        pending += transitioned
           .filter(col("state") === FrontierRow.StatePending).drop("old_ver")
-        doneParts += transitioned
+        done += transitioned
           .filter(col("state") =!= FrontierRow.StatePending).drop("old_ver")
-        pendingParts += fresh
+        pending += fresh
 
         // ---- domain-rules LRU eviction, AFTER the gate ------------------
         // (reference evicts by insert date, domaincache.py:244-259; an
@@ -667,121 +625,55 @@ final class CrawlLoop(spark: SparkSession, internet: SyntheticInternet,
         // reproducible across runs.
         if (rulesCount > config.robotsCacheSize) {
           val compacted = timed(s"b$batch rules-evict") {
-            rulesView
+            rules.view
               .orderBy(col("fetched_batch").desc, col("host").desc)
               .limit(config.robotsCacheSize)
               .localCheckpoint(true)
           }
-          rulesParts.clear()
-          rulesParts += compacted
+          rules.reset(compacted)
           rulesCount = config.robotsCacheSize
         }
 
       }
-      // durable commits sit OUTSIDE the n > 0 block: an EMPTY batch still
-      // commits its (cheap) batch_commit marker, so the resume anchor
-      // advances across drained batches instead of replaying them on
-      // every resume (r4 ADVICE #2); table commits stay conditional —
-      // nothing changed, so resume reads the latest snapshot <= marker
-      store match {
-        case Some(s) if config.durableDeltas =>
-          // 10^10-frontier durable shape: this batch's delta parts —
-          // and ONLY them — are committed (O(batch) bytes per batch);
-          // the full tables are written as a base snapshot every
-          // compactEvery batches, which also compacts memory
-          val lineage = Map("batch" -> batch.toString,
-            "dequeued" -> n.toString, "mode" -> "delta")
-          def commitSlice(table: String, parts: Seq[DataFrame]): Unit =
-            if (parts.nonEmpty)
-              s.commit(table, batch, unionAll(parts), lineage)
-          timed(s"b$batch delta-commit") {
-            commitSlice("frontier_pending_delta",
-              pendingParts.drop(pendMark).toSeq)
-            commitSlice("frontier_done_delta",
-              doneParts.drop(doneMark).toSeq)
-            commitSlice("frontier_dequeued_keys",
-              dequeuedKeyParts.drop(dkMark).toSeq)
-            commitSlice("frontier_redirect_tombstones",
-              redirectTombstoneParts.drop(rtMark).toSeq)
-            commitSlice("seen_delta", seenParts.drop(seenMark).toSeq)
-            commitSlice("crawl_log_delta", logParts.drop(logMark).toSeq)
+      // ---- end of batch: one path for every store shape. A non-empty
+      //      batch that ends a base period materializes the base tables —
+      //      committed and read back with a store, localCheckpointed
+      //      without — and every table resets onto them, baking the lazy
+      //      transitions and tombstones into one part each. Any other batch
+      //      with a store commits only the parts added since the last
+      //      commit (O(batch) bytes). Commits sit OUTSIDE the n > 0 block:
+      //      an EMPTY batch still commits its (cheap) batch_commit marker,
+      //      so the resume anchor advances across drained batches instead
+      //      of replaying them on every resume (r4 ADVICE #2) --------------
+      val lineage = Map("batch" -> batch.toString,
+        "dequeued" -> n.toString, "mode" -> mode)
+      if (n > 0 && (batch + 1) % basePeriod == 0) {
+        def materialize(table: String, df: DataFrame): DataFrame =
+          store match {
+            case Some(s) =>
+              s.commit(table, batch, df, lineage)
+              s.read(spark, table, Some(batch)).get
+            case None => df.localCheckpoint(true)
           }
-          if ((batch + 1) % config.compactEvery == 0) {
-            timed(s"b$batch base-compact") {
-              s.commit("frontier", batch, frontierView, lineage)
-              s.commit("seen", batch, seenView, lineage)
-              s.commit("crawl_log", batch, unionAll(logParts.toSeq),
-                lineage)
-              val fr = s.read(spark, "frontier", Some(batch)).get
-              pendingParts.clear()
-              pendingParts += fr.filter(
-                col("state") === FrontierRow.StatePending)
-              doneParts.clear()
-              doneParts += fr.filter(
-                col("state") =!= FrontierRow.StatePending)
-              dequeuedKeyParts.clear()
-              redirectTombstoneParts.clear()
-              seenParts.clear()
-              seenParts += s.read(spark, "seen", Some(batch)).get
-            }
-          }
-          // the marker is written LAST: a batch is durable iff its
-          // marker exists (resume anchors on it — see runInternal)
-          s.commit("batch_commit", batch,
-            Seq((batch, n)).toDF("batch", "dequeued"), lineage)
-          pendMark = pendingParts.length
-          doneMark = doneParts.length
-          dkMark = dequeuedKeyParts.length
-          rtMark = redirectTombstoneParts.length
-          seenMark = seenParts.length
-          logMark = logParts.length
-        case Some(s) =>
-          // durable mode: full snapshot per batch (time travel + exact
-          // resume); reading back also compacts the in-memory deltas
-          val lineage = Map("batch" -> batch.toString,
-            "dequeued" -> n.toString, "mode" -> "full")
-          if (n > 0) {
-            s.commit("frontier", batch, frontierView, lineage)
-            s.commit("seen", batch, seenView, lineage)
-            s.commit("crawl_log", batch, unionAll(logParts.toSeq), lineage)
-          }
-          // marker LAST — the batch is durable only once all three
-          // tables landed (resume anchors on it)
-          s.commit("batch_commit", batch,
-            Seq((batch, n)).toDF("batch", "dequeued"), lineage)
-          if (n > 0) {
-            val fr = s.read(spark, "frontier", Some(batch)).get
-            pendingParts.clear()
-            pendingParts += fr.filter(col("state") === FrontierRow.StatePending)
-            doneParts.clear()
-            doneParts += fr.filter(col("state") =!= FrontierRow.StatePending)
-            dequeuedKeyParts.clear()
-            redirectTombstoneParts.clear()
-            seenParts.clear()
-            seenParts += s.read(spark, "seen", Some(batch)).get
-          }
-        case None =>
-          // delta mode: compact the pending + seen views every K batches
-          // — one O(|state|) rewrite amortized over K O(batch) appends;
-          // bakes the lazy transitions and tombstones into one part each
-          if (n > 0 && (batch + 1) % config.compactEvery == 0) {
-            timed(s"b$batch compact") {
-              val compacted = pendingView.localCheckpoint(true)
-              pendingParts.clear()
-              pendingParts += compacted
-              dequeuedKeyParts.clear()
-              redirectTombstoneParts.clear()
-              val seenCompacted = seenView.localCheckpoint(true)
-              seenParts.clear()
-              seenParts += seenCompacted
-            }
-          }
+        val stage = if (store.isEmpty) "compact" else "base-compact"
+        timed(s"b$batch $stage") {
+          resetToBase(materialize("frontier", frontierView),
+            materialize("seen", seen.view),
+            materialize("crawl_log", log.view))
+        }
+      } else store.foreach { s =>
+        timed(s"b$batch delta-commit") {
+          for ((t, table) <- durableTables)
+            t.commitSlice(s, table, batch, lineage)
+        }
       }
+      // the marker is written LAST: a batch is durable iff its marker
+      // exists (resume anchors on it — see the resume branch above)
+      store.foreach(_.commit("batch_commit", batch,
+        Seq((batch, n)).toDF("batch", "dequeued"), lineage))
     }
-    CrawlResult(frontierView, seenView, unionAll(logParts.toSeq),
-      unionAll(pageParts.toSeq), unionAll(imageParts.toSeq),
-      unionAll(metricParts.toSeq),
-      counterRows.toSeq.toDF("batch", "counter", "value"))
+    CrawlResult(frontierView, seen.view, log.view, pages.view, images.view,
+      metrics.view, counterRows.toSeq.toDF("batch", "counter", "value"))
   }
 }
 

@@ -217,25 +217,4 @@ object FetchClient {
       bodyHash = decodedText.flatMap(Hashing.md5)
         .orElse(Hashing.md5Binary(body)))
   }
-
-  /** Partition-level fetch: sequential within the partition, per-host
-    * minimum-gap politeness (token bucket per host). Requests must arrive
-    * host-partitioned and pre-sorted for deterministic order. */
-  def fetchPartition(requests: Iterator[FetchRequest],
-      internet: SyntheticInternet): Iterator[FetchResponse] = {
-    val lastFetchNanos = mutable.Map[String, Long]()
-    requests.map { req =>
-      val host = graft.url.UrlKit.domainOnly(req.url).getOrElse("")
-      if (req.delayS > 0) {
-        lastFetchNanos.get(host).foreach { last =>
-          val elapsed = System.nanoTime() - last
-          val needed = req.delayS * 1000000000L
-          if (elapsed < needed) Thread.sleep((needed - elapsed) / 1000000L)
-        }
-      }
-      val resp = fetchOne(req, internet)
-      lastFetchNanos(host) = System.nanoTime()
-      resp
-    }
-  }
 }

@@ -484,4 +484,60 @@ class CrawlSpec extends AnyFunSuite {
       .toSeq ==
       rF.seen.select("url").collect().map(_.getString(0)).sorted.toSeq)
   }
+
+  test("no store, full store and delta store share one state path") {
+    // one end-of-batch routine serves every shape: over the same seeds an
+    // in-memory run, a full-snapshot store and a delta store with base
+    // period 2 must hold the same crawl log, seen set and whole frontier;
+    // every committed snapshot must verify; and a store run interrupted
+    // after 2 batches and resumed for 3 more (in two legs, so the last
+    // leg loads a base plus a delta) must equal its straight 5-batch run
+    import org.apache.spark.sql.functions.col
+    val seeds = (0 until 4).map(k => s"https://site-$k.test/")
+    def cfg(batches: Int, deltas: Boolean = false) = CrawlConfig(
+      maxBatches = batches, perHostBudget = 2, compactEvery = 2,
+      durableDeltas = deltas)
+    def tempRoot(tag: String) = java.nio.file.Files
+      .createTempDirectory(s"graft-one-path-$tag").toString
+    def state(r: graft.crawl.CrawlResult) = Seq(
+      r.crawlLog.select("batch", "seq", "url", "final_url", "status",
+        "host", "content_type"),
+      r.seen.select("url"),
+      r.frontier.select("url", "state", "tries", "not_before"))
+      .map(_.collect().map(_.toString).sorted.toSeq)
+    def verifyAll(root: String): Unit = {
+      val store = new SnapshotStore(root)
+      for (table <- new java.io.File(root).list(); sn <- store.snapshots(table))
+        assert(store.verify(table, sn).isEmpty, s"$table/$sn")
+    }
+
+    val mem = newLoop(cfg(5)).run(seeds)
+    assert(mem.counters.filter(col("counter") === "dequeued" &&
+      col("value") > 0).count() == 5, "every batch must do work")
+    val expected = state(mem)
+    for (deltas <- Seq(false, true)) {
+      val shape = if (deltas) "delta" else "full"
+      val root = tempRoot(shape)
+      val store = new SnapshotStore(root)
+      val straight = newLoop(cfg(5, deltas), Some(store)).run(seeds)
+      assert(state(straight) == expected,
+        s"$shape store diverges from the in-memory run")
+      // full: a base per batch (time travel); delta: bases only at the
+      // period boundaries, and no delta slices beside them
+      assert(store.snapshots("frontier") ==
+        (if (deltas) Seq(1L, 3L) else Seq(0L, 1L, 2L, 3L, 4L)))
+      if (deltas)
+        assert(store.snapshots("crawl_log_delta") == Seq(0L, 2L, 4L))
+      verifyAll(root)
+
+      val rootR = tempRoot(s"$shape-resume")
+      val interrupted = new SnapshotStore(rootR)
+      newLoop(cfg(2, deltas), Some(interrupted)).run(seeds)
+      newLoop(cfg(1, deltas), Some(interrupted)).resume()
+      val resumed = newLoop(cfg(2, deltas), Some(interrupted)).resume()
+      assert(state(resumed) == expected,
+        s"$shape store: 2 batches + resume diverge from the straight run")
+      verifyAll(rootR)
+    }
+  }
 }

@@ -309,8 +309,8 @@ class MlSpec extends AnyFunSuite {
 
   test("blocked CC rounds keep the exact maxIter accept/throw boundary") {
     import spark.implicits._
-    // r7 runs two propagation rounds per checkpoint; the contract must
-    // stay: a path of n nodes has its last label change at round n-1,
+    // each checkpoint holds one propagation round (one union + groupBy);
+    // the contract: a path of n nodes has its last label change at round n-1,
     // so it converges iff n <= maxIter — pin both sides of the edge
     val n = 6
     val nodes = (1L to n.toLong).toDF("id")
